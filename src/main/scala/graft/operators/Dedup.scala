@@ -1116,11 +1116,20 @@ object Dedup {
     // final node cover includes docs that only self-pair.
     val uniq = pairs.select(
       greatest(col("doc_a"), col("doc_b")).as("u"),
-      least(col("doc_a"), col("doc_b")).as("v"))
+      least(col("doc_a"), col("doc_b")).as("v"),
+      (col("doc_a").isNull || col("doc_b").isNull).as("null_id"))
       .distinct()
       .localCheckpoint()
-    var edges = uniq.filter(col("u") =!= col("v")).localCheckpoint()
-    var nEdges = edges.count()
+    var edges = uniq.filter(col("u") =!= col("v")).select("u", "v").localCheckpoint()
+    // one pass over the checkpointed pairs yields the edge count AND checks
+    // the loop's precondition: the convergence probe's anti-join compares
+    // with null-unsafe equality, and greatest/least would quietly turn a
+    // (null, x) pair into a self-pair, so every id must be non-null
+    val pre = uniq.agg(count(when(col("u") =!= col("v"), 1)),
+      count(when(col("null_id"), 1))).head()
+    require(pre.getLong(1) == 0,
+      s"Dedup.clusters: ${pre.getLong(1)} distinct pair(s) carry a null doc id")
+    var nEdges = pre.getLong(0)
     var converged = nEdges == 0
     var i = 0
     while (!converged && i < maxIter) {

@@ -498,10 +498,15 @@ object Semantic {
     * qvGuard bound, so double addition is exact and order-irrelevant; the
     * hash-oracle contract is untouched), evaluated in one codegen'd pass
     * per (query, vector) pair with no exchange.
+    *
+    * A null or short `codes` array (a malformed on-disk index row) has no
+    * distance: `try_element_at` makes it NULL in ANSI and non-ANSI sessions
+    * alike, and every top-k over `adist` orders `asc_nulls_last`, so such a
+    * row ranks after every scored one instead of first.
     */
   private[operators] def adcDist(m: Int): org.apache.spark.sql.Column =
     expr(s"cast(aggregate(sequence(0, ${m - 1}), 0.0d, (acc, j) -> " +
-      "acc + element_at(lut, j * ks + cast(element_at(codes, j + 1) as int) + 1)) as long)")
+      "acc + element_at(lut, j * ks + cast(try_element_at(codes, j + 1) as int) + 1)) as long)")
 
   /** Nearest-cell assignment against GIVEN coarse seeds (cell, cv quantized)
     * — [[assignCells]]' argmin with a frozen codebook, for index appends and
@@ -571,7 +576,7 @@ object Semantic {
       .filter(col("vec_id") =!= queryId)
       .crossJoin(broadcast(lut))
       .select(col("vec_id"), adcDist(m).as("adist"))
-      .orderBy(col("adist").asc, col("vec_id").asc)
+      .orderBy(col("adist").asc_nulls_last, col("vec_id").asc)
       .limit(k)
   }
 
@@ -608,7 +613,7 @@ object Semantic {
       .filter(col("vec_id") =!= col("lqid"))
       .select(col("lqid").as("query_id"), col("vec_id"), adcDist(m).as("adist"))
       .withColumn("__rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("adist").asc, col("vec_id").asc)))
+        Window.partitionBy("query_id").orderBy(col("adist").asc_nulls_last, col("vec_id").asc)))
       .filter(col("__rn") <= k)
       .select("query_id", "vec_id", "adist")
   }

@@ -541,7 +541,7 @@ object Similarity {
       .withColumn("lut", array(flat.toSeq.map(d => lit(d.toDouble)): _*))
       .withColumn("ks", lit(ksub))
       .select(col("vec_id"), Semantic.adcDist(m).as("adist"))
-      .orderBy(col("adist").asc, col("vec_id").asc)
+      .orderBy(col("adist").asc_nulls_last, col("vec_id").asc)
       .limit(k)
   }
 
@@ -751,7 +751,7 @@ object Similarity {
       .join(broadcast(luts), col("query_id") === col("lqid"))
       .select(col("query_id"), col("vec_id"), Semantic.adcDist(m).as("adist"))
       .withColumn("__rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("adist").asc, col("vec_id").asc)))
+        Window.partitionBy("query_id").orderBy(col("adist").asc_nulls_last, col("vec_id").asc)))
       .filter(col("__rn") <= k)
       .select("query_id", "vec_id", "adist")
   }

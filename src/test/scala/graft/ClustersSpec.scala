@@ -23,6 +23,16 @@ class ClustersSpec extends SparkSpec {
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L), s"got $got")
   }
 
+  test("a null doc id is refused before the loop, not folded into a self-pair") {
+    import spark.implicits._
+    // greatest/least skip nulls, so (null, 7) would silently become the
+    // self-pair (7, 7); the convergence anti-join is null-unsafe
+    val pairs = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (None, Some(7L))).toDF("doc_a", "doc_b")
+    val e = intercept[IllegalArgumentException](Dedup.clusters(pairs))
+    assert(e.getMessage.contains("null doc id"), e.getMessage)
+  }
+
   test("chains far longer than maxIter converge via star contraction") {
     import spark.implicits._
     // a 200-node path: plain one-hop propagation needs 199 rounds; the

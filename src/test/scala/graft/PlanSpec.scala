@@ -730,6 +730,36 @@ class PlanSpec extends SparkSpec {
       s"every batch window must partition by query_id:\n$winSpecs")
   }
 
+  test("ivfPqProbeBatch: two-level top-k — Partial group limit below the Exchange, Final on the scoring window") {
+    import org.apache.spark.sql.execution.{SparkPlan, adaptive, exchange, window}
+    val emb = graft.sources.Tables(spark, sfDir, "embeddings")
+    val dir = Files.createTempDirectory("ivfpq_plan").toString + "/idx"
+    graft.operators.Similarity.ivfPqWrite(emb, "vec_id", "embedding", dir, nlist = 8)
+    val df = graft.operators.Similarity.ivfPqProbeBatch(spark, dir,
+      emb.filter(col("vec_id").isin(0L, 100L)), "vec_id", "embedding", k = 10, nprobe = 2)
+    val plan: SparkPlan = df.queryExecution.executedPlan match {
+      case a: adaptive.AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    def mode(p: SparkPlan): Option[String] = p match {
+      case g: window.WindowGroupLimitExec => Some(g.mode.toString)
+      case _ => None
+    }
+    // Partial: pre-shuffle pruning, the child of a shuffle exchange
+    val partialBelowExchange = plan.collect {
+      case e: exchange.ShuffleExchangeExec if mode(e.child).contains("Partial") => e
+    }
+    // Final: directly under the window that ranks by the ADC distance
+    val finalOnScoring = plan.collect {
+      case w: window.WindowExec if w.orderSpec.exists(_.child.toString.contains("adist")) &&
+          mode(w.child).contains("Final") => w
+    }
+    assert(partialBelowExchange.nonEmpty,
+      s"a Partial WindowGroupLimit must sit below an Exchange:\n$plan")
+    assert(finalOnScoring.nonEmpty,
+      s"a Final WindowGroupLimit must feed the adist scoring window:\n$plan")
+  }
+
   test("robots filter: host-keyed equi-join + map-side-combined verdict max, never cartesian") {
     import spark.implicits._
     val rules = Seq(("h0.example.com", false, "/a/"),

@@ -412,6 +412,37 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("ivfPq probes rank a null or short codes row last, never first") {
+    import spark.implicits._
+    GraftFunctions.register(spark)
+    val dir = java.nio.file.Files.createTempDirectory("ivfpq_null").toString + "/idx"
+    Similarity.ivfPqWrite(emb, "vec_id", "embedding", dir, nlist = 8, m = 8, ksub = 16)
+    val cell = spark.read.parquet(dir).select("cell").head().getInt(0)
+    // malformed rows as an on-disk index can hold them: a null codes array
+    // and one with 1 of m = 8 codes
+    Seq((900001L, None, cell), (900002L, Some(Seq[Byte](0)), cell))
+      .toDF("vec_id", "codes", "cell")
+      .write.mode("append").partitionBy("cell").parquet(dir)
+    val bad = Set(900001L, 900002L)
+    val n = spark.read.parquet(dir).count().toInt
+    val qv = emb.filter(col("vec_id") === 0L).head().getSeq[Float](1).toArray
+    val queries = emb.filter(col("vec_id") === 0L)
+    def single(k: Int) = Similarity.ivfPqProbe(spark, dir, qv, k = k, nprobe = 8,
+      excludeId = Some(0L)).collect().map(r => (r.getLong(0), r.get(1))).toSeq
+    def batch(k: Int) = Similarity.ivfPqProbeBatch(spark, dir, queries,
+      "vec_id", "embedding", k = k, nprobe = 8)
+      .orderBy(col("adist").asc_nulls_last, col("vec_id").asc)
+      .collect().map(r => (r.getLong(1), r.get(2))).toSeq
+    for ((label, probe) <- Seq("ivfPqProbe" -> single _, "ivfPqProbeBatch" -> batch _)) {
+      assert(!probe(10).exists(r => bad(r._1)), s"$label: a malformed row reached the top-k")
+      // with every row ranked, the two malformed rows come last with no distance
+      val all = probe(n)
+      assert(all.takeRight(2).map(_._1).toSet == bad, s"$label: ${all.takeRight(3)}")
+      assert(all.takeRight(2).forall(_._2 == null), label)
+      assert(all.dropRight(2).forall(_._2 != null), label)
+    }
+  }
+
   test("ivfPqRerankBatch: each query's reranked list equals the single-query ivfPqRerank") {
     GraftFunctions.register(spark)
     val dir = java.nio.file.Files.createTempDirectory("ivfpq_rb").toString + "/idx"
